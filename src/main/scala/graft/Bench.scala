@@ -1,7 +1,9 @@
 package graft
 
 import graft.bench.Headline
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import scala.util.control.NonFatal
 
 /** Per-round benchmark: times every CORE-tier SparkEntry query
   * ([[graft.queries.Tiers.core]] — `SparkEntry.queries` exposes exactly that
@@ -24,14 +26,22 @@ import org.apache.spark.sql.SparkSession
   * efficiency as the headline (robust under symmetric jitter; the
   * paired-best and global min-ratio ride alongside, never hidden) and
   * derives `efficiency_vs_ceiling` from the same paired statistic.
+  *
+  * A query that throws in any sweep gets no time: it is listed under
+  * `failed` on the stdout line and in `BENCH_DETAIL.json`, and the run
+  * exits non-zero, so a broken query can never read as a faster bench.
   */
 object Bench {
 
-  private def timeQuery(fn: => org.apache.spark.sql.DataFrame): Double = {
+  /** Wall seconds of one full evaluation through the noop sink, or the
+    * error that stopped it.
+    */
+  private def timeQuery(fn: => DataFrame): Either[Throwable, Double] = {
     val t0 = System.nanoTime()
-    try fn.write.format("noop").mode("overwrite").save()
-    catch { case _: Throwable => return -1.0 }
-    (System.nanoTime() - t0) / 1e9
+    try {
+      fn.write.format("noop").mode("overwrite").save()
+      Right((System.nanoTime() - t0) / 1e9)
+    } catch { case NonFatal(e) => Left(e) }
   }
 
   /** One warm measurement pass at a given parallelism: warmup run + 2 timed
@@ -165,21 +175,27 @@ object Bench {
     else (s(n / 2 - 1) + s(n / 2)) / 2.0
   }
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+  def main(args: Array[String]): Unit = sys.exit(run(sys.env, SparkEntry.queries))
+
+  /** The whole bench over `queries`, configured by `env`; prints the ONE
+    * JSON line and returns the exit status: 1 if any query failed.
+    */
+  def run(env: Map[String, String],
+          queries: Map[String, (SparkSession, String) => DataFrame]): Int = {
+    val sfDir = env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val cpus = env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     // 2048 replicas (1.23G probe rows): long enough runs that host jitter
     // stops dominating the lo/hi ratio, and fixed per-run work amortizes at
     // both parallelism levels (measured +8% hi, +21% lo rows/s vs k=1024)
-    val k = sys.env.getOrElse("SPARK_GRAFT_HEADLINE_K", "2048").toInt
-    val doScaling = sys.env.getOrElse("SPARK_GRAFT_SCALING", "1") == "1"
+    val k = env.getOrElse("SPARK_GRAFT_HEADLINE_K", "2048").toInt
+    val doScaling = env.getOrElse("SPARK_GRAFT_SCALING", "1") == "1"
     // 0 skips the per-query loop (scaling-methodology experiments)
-    val doQueries = sys.env.getOrElse("SPARK_GRAFT_QUERIES", "1") == "1"
+    val doQueries = env.getOrElse("SPARK_GRAFT_QUERIES", "1") == "1"
     // full interleaved sweeps of the query list; min per query is committed
     val queryPasses =
-      math.max(1, sys.env.getOrElse("SPARK_GRAFT_QUERY_PASSES", "3").toInt)
+      math.max(1, env.getOrElse("SPARK_GRAFT_QUERY_PASSES", "3").toInt)
     // optional comma-separated query-name filter for local iteration
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
+    val only = env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).toSet).filter(_.nonEmpty)
 
     val spark = SparkSession.builder()
@@ -199,7 +215,7 @@ object Bench {
     spark.range(0, 1000000).selectExpr("sum(id)").collect()
     // multi-file staging (see stagedCopy scaladoc); queries + ckpt read it
     val benchDir =
-      if (sys.env.getOrElse("SPARK_GRAFT_STAGE", "1") == "1")
+      if (env.getOrElse("SPARK_GRAFT_STAGE", "1") == "1")
         try stagedCopy(spark, sfDir) catch { case _: Throwable => sfDir }
       else sfDir
     try spark.read.parquet(s"$benchDir/lineitem.parquet")
@@ -210,34 +226,35 @@ object Bench {
     // query's first-sweep entry absorbs that one-time cost
     try spark.range(0, 100).write.format("noop").mode("overwrite").save()
     catch { case _: Throwable => () }
-    val queryNames = SparkEntry.queries.keys.toSeq.sorted
+    val queryNames = queries.keys.toSeq.sorted
       .filter(n => only.forall(_.contains(n)))
     // interleaved sweeps: pass p times every query once before any query
     // runs its pass p+1, so a host-contention window contaminates at most
     // one sweep of each query, and the per-query min is taken across
     // independent windows (the whole point of committing min-of-N)
-    val sweeps: Seq[Map[String, Double]] =
+    val sweeps: Seq[Map[String, Either[Throwable, Double]]] =
       if (!doQueries) Seq.empty
       else (1 to queryPasses).map { _ =>
         queryNames.map { name =>
-          name -> timeQuery(SparkEntry.queries(name)(spark, benchDir))
+          val t = timeQuery(queries(name)(spark, benchDir))
+          t.left.foreach(e => System.err.println(s"[bench] $name failed: $e"))
+          name -> t
         }.toMap
       }
+    val failed = queryNames.filter(n => sweeps.exists(_(n).isLeft))
+    val timed = queryNames.filterNot(failed.contains)
     val queryResults: Seq[(String, Double)] =
       if (sweeps.isEmpty) Seq.empty
-      else queryNames.map { n =>
-        val ts = sweeps.map(_(n)).filter(_ >= 0)
-        n -> (if (ts.isEmpty) -1.0 else ts.min)
-      }
+      else timed.map(n => n -> sweeps.map(_(n).toOption.get).min)
     val coldResults: Seq[(String, Double)] =
       if (sweeps.isEmpty) Seq.empty
-      else queryNames.map(n => n -> sweeps.head(n))
+      else timed.map(n => n -> sweeps.head(n).toOption.get)
     // resumable-write wall-time vs bucket count: the single-job write makes
     // wall time a function of data size, not bucket count (the per-bucket
     // job loop it replaced scaled linearly in buckets). Interleaved passes,
     // min per bucket count.
     val ckptResults = if (!(doQueries && only.isEmpty) &&
-        !sys.env.get("SPARK_GRAFT_CKPT").contains("1")) Seq.empty else {
+        !env.get("SPARK_GRAFT_CKPT").contains("1")) Seq.empty else {
       val df = spark.read.parquet(s"$benchDir/lineitem.parquet")
         .select("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey",
           "l_quantity", "l_extendedprice")
@@ -343,16 +360,16 @@ object Bench {
         // 6 pairs ≈ 7 min with the ceiling probes — enough for a stable
         // median without risking the driver's bench window (r4 lesson)
         val nPairs =
-          math.max(1, sys.env.getOrElse("SPARK_GRAFT_SCALING_PASSES", "6").toInt)
+          math.max(1, env.getOrElse("SPARK_GRAFT_SCALING_PASSES", "6").toInt)
         spinWall(2); memWall(2); releaseMemBuf() // JIT warmup
         val (bcastS, bcastF) = scalingBlock(nPairs, k, Headline.run)
         // cogroup path: every probe row crosses the shuffle, so the same
         // wall budget covers fewer rows — default 1/32 the broadcast fan-out
         // (still ~38M rows/run at sf0.1, ≥8s of work per timed run at
         // local[32]) and half the pairs
-        val kCg = sys.env.getOrElse("SPARK_GRAFT_HEADLINE_COGROUP_K",
+        val kCg = env.getOrElse("SPARK_GRAFT_HEADLINE_COGROUP_K",
           math.max(1, k / 32).toString).toInt
-        val nPairsCg = math.max(1, sys.env.getOrElse(
+        val nPairsCg = math.max(1, env.getOrElse(
           "SPARK_GRAFT_SCALING_PASSES_COGROUP", (nPairs / 2).toString).toInt)
         val (cgS, cgF) = scalingBlock(nPairsCg, kCg, Headline.runCogroup(_, _, _))
         val rpsHi = "\"rows_per_sec_hi\":([0-9]+)".r
@@ -364,8 +381,9 @@ object Bench {
     def asJson(rs: Seq[(String, Double)]): String =
       rs.map { case (q, v) => "\"" + q + "\":" + f"$v%.3f" }
         .mkString("{", ",", "}")
-    val total = results.map(_._2).filter(_ >= 0).sum
+    val total = results.map(_._2).sum
     val totalStr = f"$total%.3f"
+    val failedJson = failed.map("\"" + _ + "\"").mkString(",\"failed\":[", ",", "]")
     // The ONE stdout JSON line must stay well under ~2000 chars: the driver
     // keeps only the output tail, and rounds 3 and 4 both produced
     // `parsed: null` because the full per-query map pushed the line's head
@@ -381,7 +399,7 @@ object Bench {
       "events_sessions", "stream_window_counts")
     val resultMap = results.toMap
     val shortQueries = headlineSubset.flatMap(n => resultMap.get(n).map(n -> _))
-    val detailPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL",
+    val detailPath = env.getOrElse("SPARK_GRAFT_BENCH_DETAIL",
       "BENCH_DETAIL.json")
     // "first sweep", not "cold": the session warmup and any table/footer
     // reuse across queries mean sweep 1 is only process-cold for the first
@@ -390,9 +408,10 @@ object Bench {
       if (coldResults.isEmpty || queryPasses == 1) ""
       else s""","queries_first_sweep":${asJson(coldResults)}"""
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(detailPath),
-      s"""{"metric":"total","value":$totalStr,"unit":"sec","query_count":${results.size},"query_passes":$queryPasses,"queries":${asJson(results)},"sf":"$sfDir"$coldJson$scalingFull}""" + "\n")
+      s"""{"metric":"total","value":$totalStr,"unit":"sec","query_count":${results.size}$failedJson,"query_passes":$queryPasses,"queries":${asJson(results)},"sf":"$sfDir"$coldJson$scalingFull}""" + "\n")
     catch { case e: Throwable =>
       System.err.println(s"[bench] detail write failed: ${e.getMessage}") }
-    println(s"""{"metric":"total","value":$totalStr,"unit":"sec","query_count":${results.size},"query_passes":$queryPasses,"queries":${asJson(shortQueries)},"detail":"$detailPath","sf":"$sfDir"$scalingShort}""")
+    println(s"""{"metric":"total","value":$totalStr,"unit":"sec","query_count":${results.size}$failedJson,"query_passes":$queryPasses,"queries":${asJson(shortQueries)},"detail":"$detailPath","sf":"$sfDir"$scalingShort}""")
+    if (failed.isEmpty) 0 else 1
   }
 }

@@ -81,23 +81,24 @@ object Headline {
     * a whole-planet tile store must take once the pyramid exceeds any
     * broadcast budget (TileIndex.broadcastIndex scaladoc). Quoted separately
     * so the 100 TB headline number does not rest solely on the broadcast plan:
-    * this path hash-partitions BOTH sides on (tile_key, salt) — every probe
-    * row crosses the wire once and pays typed-row serialization, which is the
-    * honest per-row cost structure of the at-scale plan.
+    * this path hash-partitions probes and tile latitude bands together on
+    * (tile_key, band) — every probe row and every raster byte crosses the
+    * wire once, which is the honest per-row cost structure of the at-scale
+    * plan.
     *
-    * `salt` is FIXED (not a function of the parallelism level) so the lo and
-    * hi scaling passes run the identical job: 8 tiles × 8 lanes = 64 groups,
-    * ≥ 2 groups per core at local[32] and 8 at local[8].
+    * `bands` is FIXED (not a function of the parallelism level) so the lo
+    * and hi scaling passes run the identical job: 8 tiles × 8 bands = 64
+    * groups, ≥ 2 groups per core at local[32] and 8 at local[8].
     */
   def runCogroup(spark: SparkSession, sfDir: String, replicate: Int,
-                 salt: Int = 8): (Long, Double) = {
+                 bands: Int = 8): (Long, Double) = {
     import spark.implicits._
     val pts = points(spark, sfDir, replicate)
       .selectExpr("CAST(point_id AS STRING) AS feature_id",
         "CAST(rep AS BIGINT) AS coord_idx", "lng", "lat")
       .as[graft.core.CoordRow]
     val sampled = Elevation.lookupCogroup(pts,
-      tiles(spark).as[TileRow](Encoders.product[TileRow]), salt)
+      tiles(spark).as[TileRow](Encoders.product[TileRow]), bands)
     val t0 = System.nanoTime()
     val row = sampled.toDF()
       .agg(count(lit(1)).as("n"), sum(col("elev")).as("s")).collect()(0)

@@ -42,15 +42,25 @@ object TileCodec {
   def decode(t: TileRow): DecodedTile = {
     val (swLng, swLat) = TileKey.toDegrees(t.image_id)
     t.fmt match {
-      case "hgt" =>
-        require(t.bytes.length == t.w * t.h * 2,
-          s"hgt bytes ${t.bytes.length} != 2*${t.w}*${t.h} (P3 size predicate)")
-        DecodedTile(t.w, swLng, swLat, Hgt.decode(t.bytes, t.w))
+      case "hgt" => DecodedTile(t.w, swLng, swLat, Hgt.decode(hgtBytes(t), t.w))
       case "png" | "jpg" =>
         val (grid, size) = ImageCodec.decodeToGrid(t.bytes)
         require(size == t.w, s"image size $size != w=${t.w}")
         DecodedTile(size, swLng, swLat, grid)
       case other => throw new IllegalArgumentException(s"unsupported fmt: $other")
     }
+  }
+
+  /** The tile's payload as HGT bytes: `hgt` passes through after the size
+    * check, png/jpg are decoded once and re-encoded with [[Hgt.encode]].
+    */
+  def hgtBytes(t: TileRow): Array[Byte] = t.fmt match {
+    case "hgt" =>
+      require(t.bytes.length == t.w * t.h * 2,
+        s"hgt bytes ${t.bytes.length} != 2*${t.w}*${t.h} (P3 size predicate)")
+      t.bytes
+    case _ =>
+      val d = decode(t)
+      Hgt.encode(d.samples, d.size)
   }
 }

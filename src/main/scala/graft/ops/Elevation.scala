@@ -3,9 +3,9 @@ package graft.ops
 import graft.core._
 import graft.functions.spatial._
 import graft.geo.TileKey
-import graft.raster.Bilinear
+import graft.raster.{Bilinear, Hgt}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row}
 
 /** One sampled coordinate (J1/J4 output row). */
 final case class ElevRow(feature_id: String, coord_idx: Long, lng: Double,
@@ -24,11 +24,11 @@ final case class ElevRow(feature_id: String, coord_idx: Long, lng: Double,
   *    `bytes` column: no decode step at all for `fmt=hgt` (4 random int16
   *    reads per probe), zero shuffle.
   *
-  *  - [[lookupCogroup]]: the 100 TB path. Both sides hash-partition on
-  *    (tile_key, salt); each group decodes its tile **once** and streams its
-  *    coordinates through in-memory sampling. Salting (`salt > 1`) splits the
-  *    coordinate stream of hot tiles (urban-hotspot skew, north rule) across
-  *    `salt` reducers by replicating only the tile row — never the coords.
+  *  - [[lookupCogroup]]: the 100 TB path. One hash exchange on (tile key,
+  *    latitude band) carries every probe and every tile band once; each
+  *    reducer samples its probes straight from the band's HGT bytes. A hot
+  *    tile's probes spread over `bands` reducers because the tile is split
+  *    into row bands, not copied.
   */
 object Elevation {
 
@@ -114,59 +114,59 @@ object Elevation {
         col("ratio") > col("prev_max"))
   }
 
-  /** The literal join formulation (J1 as a BroadcastHashJoin on tile_key +
-    * bilinear over the joined `bytes`). Kept for plan-shape comparison and
-    * for tile tables too wide to index; NOT the fast path — each probe row
-    * materializes its tile payload.
-    */
-  def lookupBytesJoin(coords: DataFrame, tiles: Dataset[TileRow]): DataFrame = {
-    val t = tiles.toDF().select(col("image_id"), col("bytes"), col("w"))
-    coords
-      .withColumn("tile_key", tile_key(col("lng"), col("lat")))
-      .join(broadcast(t), col("tile_key") === col("image_id"), "left_outer")
-      .withColumn("elev",
-        coalesce(bilinear_hgt(col("bytes"), col("w"), col("lng"), col("lat")), lit(0.0)))
-      .drop("image_id", "bytes", "w")
-  }
-
-  /** Shuffle/cogroup path with optional skew salting. Handles every `fmt`
-    * (hgt/png/jpg) because each tile is decoded exactly once per group.
+  /** Shuffle path for tile sets too large to broadcast; handles every `fmt`
+    * (png/jpg are decoded once on the map side and re-encoded as HGT).
+    *
+    * Tile band `b` of `bands` holds logical rows
+    * `[max(0, b·n/bands − 1), min(n, ⌈(b+1)·n/bands⌉ + 1)]` (`n = size − 1`),
+    * a contiguous byte range of the north-first HGT payload, and a probe
+    * goes to band `min(floor(frac(lat)·bands), bands − 1)`. The one-row
+    * margins cover the rounding of `(lat − swLat)·n` and the `rowLow + 1`
+    * neighbour, so the band holds both sample rows. Probes and tile bands
+    * share one exchange on `(_k, _b)`; within a partition each band sorts
+    * before its probes, and a probe with no band in front of it is on a
+    * missing tile ⇒ sea level 0 (F8).
     */
   def lookupCogroup(coords: Dataset[CoordRow], tiles: Dataset[TileRow],
-                    salt: Int = 1): Dataset[ElevRow] = {
-    val spark = coords.sparkSession
-    import spark.implicits._
-    val s = math.max(1, salt)
-    // Packed Long shuffle key `tileIntKey * salt + lane` instead of a
-    // per-row `"$tileKey#$lane"` string: the string form allocates, hashes
-    // and compares ~16 bytes per probe row — pure overhead on the path
-    // where EVERY row crosses the shuffle. The int tile key is the same
-    // bijection the broadcast index uses (TileIndex.key).
-    val keyedCoords = coords.groupByKey { c =>
-      val k = TileIndex.key(math.floor(c.lng).toInt, math.floor(c.lat).toInt).toLong
-      // salt lane from a per-row hash: coord_idx alone degenerates to one
-      // lane for point-style inputs where every row has coord_idx 0
-      val lane = if (s == 1) 0
-        else math.floorMod(c.feature_id.hashCode * 31 + c.coord_idx.toInt, s)
-      k * s + lane
-    }
-    val keyedTiles = tiles.flatMap { t =>
+                    bands: Int = 1): Dataset[ElevRow] = {
+    val nb = math.max(1, bands)
+    val swLng = floor(col("lng")); val swLat = floor(col("lat"))
+    val probes = coords.toDF().select( // _k: TileIndex.key in doubles, so ±Inf cannot overflow
+      ((swLat + 90.0) * 360.0 + swLng + 180.0).as("_k"),
+      least(floor((col("lat") - swLat) * nb), lit(nb - 1L)).as("_b"),
+      col("feature_id"), col("coord_idx"), col("lng"), col("lat"))
+    val tileBands = tiles.flatMap { t =>
       val (lngD, latD) = TileKey.toDegrees(t.image_id)
-      val k = TileIndex.key(lngD, latD).toLong
-      (0 until s).iterator.map(i => (k * s + i, t))
-    }.groupByKey(_._1)
-    keyedCoords.cogroup(keyedTiles) { (_, cs, ts) =>
-      ts.toSeq.headOption match {
-        case Some((_, tile)) =>
-          val d = TileCodec.decode(tile)
-          cs.map { c =>
-            ElevRow(c.feature_id, c.coord_idx, c.lng, c.lat, tile.image_id,
-              Bilinear.sampleGrid(d.samples, d.size, d.swLng.toDouble,
-                d.swLat.toDouble, c.lng, c.lat))
-          }
-        case None => // missing tile ⇒ sea level (F8 no-data coalesce)
-          cs.map(c => ElevRow(c.feature_id, c.coord_idx, c.lng, c.lat,
-            TileKey.of(c.lng, c.lat), 0.0))
+      val hgt = TileCodec.hgtBytes(t)
+      val n = t.w - 1
+      Iterator.tabulate(nb) { b =>
+        val lo = math.max(0, b * n / nb - 1)
+        val hi = math.min(n, ((b + 1) * n + nb - 1) / nb + 1)
+        (TileIndex.key(lngD, latD).toDouble, b.toLong, t.image_id, Hgt.band(hgt, t.w, lo, hi), t.w, hi)
+      }
+    }(Encoders.product[(Double, Long, String, Array[Byte], Int, Int)])
+      .toDF("_k", "_b", "image_id", "band", "w", "top")
+    probes.unionByName(tileBands, allowMissingColumns = true)
+      .repartition(col("_k"), col("_b"))
+      .sortWithinPartitions(col("_k"), col("_b"), col("w").asc_nulls_last)
+      .mapPartitions(sampleBands _)(Encoders.product[ElevRow])
+  }
+
+  /** Reducer side of [[lookupCogroup]]: rows are `(_k, _b, feature_id,
+    * coord_idx, lng, lat, image_id, band, w, top)`, tile bands first.
+    */
+  private def sampleBands(rows: Iterator[Row]): Iterator[ElevRow] = {
+    var tile: Row = null
+    rows.flatMap { r =>
+      if (!r.isNullAt(8)) { tile = r; Iterator.empty }
+      else {
+        val lng = r.getDouble(4); val lat = r.getDouble(5)
+        val hit = tile != null && tile.getDouble(0) == r.getDouble(0) && tile.getLong(1) == r.getLong(1)
+        Iterator.single(
+          if (hit) ElevRow(r.getString(2), r.getLong(3), lng, lat, tile.getString(6),
+            Bilinear.sampleBand(tile.getAs[Array[Byte]](7), tile.getInt(8), tile.getInt(9),
+              math.floor(lng), math.floor(lat), lng, lat))
+          else ElevRow(r.getString(2), r.getLong(3), lng, lat, TileKey.of(lng, lat), 0.0))
       }
     }
   }

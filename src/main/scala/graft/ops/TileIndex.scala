@@ -278,8 +278,8 @@ object TileIndex {
 
   /** Collect + broadcast the tile table. Sized for bounded tile sets (the
     * common case: a query bbox covers few tiles; a whole-planet 3″ store is
-    * ~64k land tiles ≈ 180 GB encoded — beyond that use
-    * [[Elevation.lookupCogroup]], the shuffle path).
+    * ~64k land tiles ≈ 180 GB encoded — beyond that use the shuffle path
+    * [[Elevation.lookupCogroup]], which splits tiles into latitude bands).
     */
   def broadcastIndex(tiles: Dataset[TileRow]): Broadcast[TileIndex] = {
     val rows = tiles.collect()

@@ -179,8 +179,8 @@ object QGeo1 {
           element_at(col("rgb"), 2).as("g"), element_at(col("rgb"), 3).as("b"))
         .orderBy("point_id")
     }),
-    // J1 through the shuffle path (the 100 TB route: cogroup on tile key,
-    // decode each tile once per group, salt-4) — same oracle as the
+    // J1 through the shuffle path (the 100 TB route: one exchange on tile
+    // key and latitude band, 4 bands) — same oracle as the
     // broadcast-index path, proving physical-path equivalence in the gate.,
     "geo_elev_cogroup" -> ((s, dir) => {
       import s.implicits._
@@ -188,7 +188,7 @@ object QGeo1 {
         .select(col("point_id").cast("string").as("feature_id"),
           lit(0L).as("coord_idx"), col("lng"), col("lat"))
         .as[core.CoordRow]
-      ops.Elevation.lookupCogroup(coords, gateTiles(s), salt = 4)
+      ops.Elevation.lookupCogroup(coords, gateTiles(s), bands = 4)
         .toDF()
         .select(col("feature_id").cast("long").as("point_id"),
           col("tile_key"), col("elev"))

@@ -24,7 +24,15 @@ object Bilinear {
 
   /** Bilinear sample from raw HGT bytes; `size` = samples per side. */
   def sampleHgt(bytes: Array[Byte], size: Int, swLng: Double, swLat: Double,
-                lng: Double, lat: Double): Double = {
+                lng: Double, lat: Double): Double =
+    sampleBand(bytes, size, size - 1, swLng, swLat, lng, lat)
+
+  /** As [[sampleHgt]] over a band of whole HGT rows whose north-most row is
+    * logical row `top` ([[Hgt.band]]); the band must hold rows rowLow and
+    * rowHi of the sample.
+    */
+  def sampleBand(bytes: Array[Byte], size: Int, top: Int, swLng: Double, swLat: Double,
+                 lng: Double, lat: Double): Double = {
     val n = size - 1
     val row = (lat - swLat) * n
     val col = (lng - swLng) * n
@@ -35,10 +43,10 @@ object Bilinear {
     val colFrac = col - colLow
     val rowHi = if (rowLow + 1 > n) n else rowLow + 1
     val colHi = if (colLow + 1 > n) n else colLow + 1
-    val v00 = Hgt.readSample(bytes, size, rowLow, colLow)
-    val v10 = Hgt.readSample(bytes, size, rowLow, colHi)
-    val v11 = Hgt.readSample(bytes, size, rowHi, colHi)
-    val v01 = Hgt.readSample(bytes, size, rowHi, colLow)
+    val v00 = Hgt.readBand(bytes, size, top, rowLow, colLow)
+    val v10 = Hgt.readBand(bytes, size, top, rowLow, colHi)
+    val v11 = Hgt.readBand(bytes, size, top, rowHi, colHi)
+    val v01 = Hgt.readBand(bytes, size, top, rowHi, colLow)
     val v1 = v00 + (v10 - v00) * colFrac
     val v2 = v01 + (v11 - v01) * colFrac
     v1 + (v2 - v1) * rowFrac

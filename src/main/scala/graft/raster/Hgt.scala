@@ -27,10 +27,23 @@ object Hgt {
   }
 
   /** int16 sample at logical (row, col), row 0 = south edge. */
-  def readSample(bytes: Array[Byte], size: Int, row: Int, col: Int): Int = {
-    val i = ((size - row - 1) * size + col) << 1
+  def readSample(bytes: Array[Byte], size: Int, row: Int, col: Int): Int =
+    readBand(bytes, size, size - 1, row, col)
+
+  /** int16 sample at logical (row, col) of a band: whole rows in the same
+    * north-first layout whose first row is logical row `top` (a full tile
+    * is the band with `top = size - 1`).
+    */
+  def readBand(bytes: Array[Byte], size: Int, top: Int, row: Int, col: Int): Int = {
+    val i = ((top - row) * size + col) << 1
     (bytes(i) << 8) | (bytes(i + 1) & 0xff) // bytes(i) sign-extends → int16
   }
+
+  /** The band of logical rows `lo..hi` (inclusive): one contiguous byte
+    * range of the north-first layout, read back with `readBand(.., top = hi, ..)`.
+    */
+  def band(bytes: Array[Byte], size: Int, lo: Int, hi: Int): Array[Byte] =
+    java.util.Arrays.copyOfRange(bytes, (size - 1 - hi) * size * 2, (size - lo) * size * 2)
 
   /** Encode a logical south-first grid `samples(row*size + col)` to HGT bytes. */
   def encode(samples: Array[Short], size: Int): Array[Byte] = {

@@ -11,8 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** End-to-end `/geojson` query on the reference's own golden fixture against
   * a pure-Scala scalar oracle (reference semantics re-implemented coordinate
-  * by coordinate), plus physical-path equivalence (broadcast vs cogroup vs
-  * salted cogroup vs png-format tiles).
+  * by coordinate), plus physical-path equivalence (broadcast vs the banded
+  * shuffle path, hgt and png tiles, on tile seams and band edges).
   */
 class ElevationSparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -72,22 +72,46 @@ class ElevationSparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got.length == 5 && got.forall(_ == 0.0))
   }
 
-  test("cogroup path (salt 1 and 4) and png tiles agree with broadcast exactly") {
+  test("cogroup path (bands 1, 4, 7, 8, 15; hgt, png) equals broadcast bit for bit") {
     import spark.implicits._
-    val features = spark.createDataset(GeoJson.featureRows(GeoJson.parse(jmt)))
-    val coords = Elevation.coordRows(features)
-    val hgt = spark.createDataset(tiles("hgt"))(Encoders.product[TileRow])
-    val png = spark.createDataset(tiles("png"))(Encoders.product[TileRow])
+    // 7 divides neither 600 nor 1200; with 15, (lat − swLat)·n rounds across
+    // a band edge just below some boundaries on tiles (0, 0) and (0, -1), so
+    // both one-row band margins are needed
+    val bandCounts = Seq(1, 4, 7, 8, 15)
+    // (0,-1): lat = nextDown(0.0) rounds frac(lat) up to 1.0, so rowLow = n
+    val edgeCorners = corners ++ Seq((0, 0), (0, -1), (-1, -1))
+    val adversarial: Seq[(Double, Double)] = edgeCorners.flatMap { case (x, y) =>
+      val lngs = Seq(x.toDouble, x + 0.37, Math.nextDown(x + 1.0))
+      val lats = y.toDouble +: Math.nextDown(y + 1.0) +: // seam, north edge
+        bandCounts.flatMap(b => (1 until b).flatMap { i => // band boundaries, and 5 ulps below
+          Iterator.iterate(y + i.toDouble / b)(Math.nextDown).take(6)
+        })
+      for (lng <- lngs; lat <- lats) yield (lng, lat)
+    } ++ Seq((-0.0, 0.5), (0.5, -0.0), (-0.0, -0.0), // -0.0 keys to tile (0, 0)
+      // not (x, +Inf): the broadcast index's Int tile key wraps it onto tile (floor(x), -1)
+      (Double.NaN, 0.5), (0.5, Double.NaN), (Double.NegativeInfinity, 0.5),
+      (-119.0, 38.0), (-118.0, 36.5), (12.5, 45.5), (-121.5, -0.0)) // missing tiles
+    val jmtCoords = Elevation.coordRows(spark.createDataset(GeoJson.featureRows(GeoJson.parse(jmt))))
+    val coords = jmtCoords.union(spark.createDataset(adversarial.zipWithIndex.map {
+      case ((lng, lat), i) => CoordRow("adversarial", i.toLong, lng, lat) }))
+    val hgt = spark.createDataset(TileGen.tiles(edgeCorners, 601, "hgt"))(Encoders.product[TileRow])
+    val png = spark.createDataset(TileGen.tiles(edgeCorners, 601, "png"))(Encoders.product[TileRow])
     val base = Elevation.lookupBroadcast(coords.toDF(), hgt)
       .select($"feature_id", $"coord_idx", $"elev").as[(String, Long, Double)]
       .collect().map(r => (r._1, r._2) -> r._3).toMap
-    for ((name, ds) <- Seq(
-        "cogroup" -> Elevation.lookupCogroup(coords, hgt),
-        "cogroup-salt4" -> Elevation.lookupCogroup(coords, hgt, salt = 4),
-        "cogroup-png" -> Elevation.lookupCogroup(coords, png))) {
-      val got = ds.collect()
+    assert(base.size == 5998 + adversarial.size)
+    (adversarial.size - 4 until adversarial.size).foreach(i => assert(base(("adversarial", i.toLong)) == 0.0))
+    for ((fmt, ts) <- Seq("hgt" -> hgt, "png" -> png); bands <- bandCounts) {
+      val name = s"$fmt bands=$bands"
+      val got = Elevation.lookupCogroup(coords, ts, bands).collect()
       assert(got.length == base.size, name)
-      got.foreach(r => assert(r.elev == base((r.feature_id, r.coord_idx)), s"$name (${r.feature_id},${r.coord_idx})"))
+      got.foreach { r =>
+        val expect = base((r.feature_id, r.coord_idx))
+        assert(java.lang.Double.doubleToRawLongBits(r.elev) ==
+          java.lang.Double.doubleToRawLongBits(expect),
+          s"$name (${r.feature_id},${r.coord_idx}) at (${r.lng},${r.lat}): ${r.elev} != $expect")
+        assert(r.tile_key == TileKey.of(r.lng, r.lat), s"$name tile_key ${r.tile_key}")
+      }
     }
   }
 

@@ -1,11 +1,11 @@
 package graft
 
-import graft.core.TileRow
+import graft.core.{CoordRow, TileRow}
 import graft.ops.Elevation
 import graft.synth.TileGen
 import org.apache.spark.sql.{Encoders, SparkSession}
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-import org.apache.spark.sql.execution.{FileSourceScanExec, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.{CoGroupExec, FileSourceScanExec, WholeStageCodegenExec}
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -40,6 +40,35 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(shuffles.isEmpty, s"expected no shuffle, plan:\n$plan")
     val codegen = plan.collect { case w: WholeStageCodegenExec => w }
     assert(codegen.nonEmpty, "expected whole-stage codegen")
+  }
+
+  test("shuffle elevation lookup: one exchange, tile bands shuffled once, never collected") {
+    import spark.implicits._
+    val bands = 4
+    val ts = TileGen.tiles(Seq((-120, 36), (-119, 36), (-120, 37)), 61, "hgt")
+    val tiles = spark.createDataset(ts)(Encoders.product[TileRow])
+    val probes = 1000
+    val coords = (0 until probes).map(i =>
+      CoordRow(s"p$i", i.toLong, -120.5 + i * 1e-3, 36.2 + i * 1e-3)).toDS()
+    val sc = spark.sparkContext
+    sc.setJobGroup("planspec_lookup_cogroup", "plan build only")
+    val out = try Elevation.lookupCogroup(coords, tiles, bands)
+      finally sc.clearJobGroup()
+    assert(sc.statusTracker.getJobIdsForGroup("planspec_lookup_cogroup").isEmpty,
+      "building the lookup ran a job (tile side collected?)")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      assert(out.collect().length == probes)
+      val plan = out.queryExecution.executedPlan
+      val shuffles = plan.collect { case s: ShuffleExchangeExec => s }
+      assert(shuffles.length == 1, s"expected one exchange, plan:\n$plan")
+      assert(plan.collect { case c: CoGroupExec => c }.isEmpty, s"CoGroup in plan:\n$plan")
+      assert(plan.collect { case b: BroadcastExchangeExec => b }.isEmpty,
+        s"tile side broadcast, plan:\n$plan")
+      val written = shuffles.head.metrics("shuffleRecordsWritten").value
+      assert(written == probes + ts.size * bands,
+        s"$written rows entered the exchange, want $probes probes + ${ts.size}×$bands tile bands")
+    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
   }
 
   test("filters and projection push down to the parquet scan") {
