@@ -216,7 +216,10 @@ object Bench {
     // multi-file staging (see stagedCopy scaladoc); queries + ckpt read it
     val benchDir =
       if (env.getOrElse("SPARK_GRAFT_STAGE", "1") == "1")
-        try stagedCopy(spark, sfDir) catch { case _: Throwable => sfDir }
+        try stagedCopy(spark, sfDir) catch { case e: Throwable =>
+          System.err.println(s"[bench] stagedCopy failed, timing unstaged tables: $e")
+          sfDir
+        }
       else sfDir
     try spark.read.parquet(s"$benchDir/lineitem.parquet")
       .selectExpr("sum(l_partkey)").collect()

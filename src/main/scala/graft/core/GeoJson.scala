@@ -40,9 +40,9 @@ object GeoJson {
   /** Split a document into Feature rows. A bare Geometry becomes a single
     * anonymous Feature. The row's `feature_id` is ALWAYS the document index:
     * GeoJSON `id` fields need not be unique (the reference's own JMT fixture
-    * has 54 features with 33 distinct ids) and reassembly groups on
-    * `feature_id`, so it must be a key. The original `id` stays untouched
-    * inside `feature_json` (lossless round-trip).
+    * has 54 features with 33 distinct ids) and coordinate rows are keyed on
+    * (`feature_id`, `coord_idx`), so it must be a key. The original `id`
+    * stays untouched inside `feature_json` (lossless round-trip).
     */
   def featureRows(doc: JsonNode): Seq[FeatureRow] = {
     require(isGeoJson(doc), "not GeoJSON")
@@ -78,13 +78,15 @@ object GeoJson {
     }
   }
 
+  /** The geometry of a parsed Feature, or the node itself if it is a bare geometry. */
+  private def geometry(f: JsonNode): JsonNode =
+    if (f.get("type").asText() == "Feature") f.get("geometry") else f
+
   /** Flatten one feature's coordinates in coordEach order. */
   def coordRows(fr: FeatureRow): Seq[CoordRow] = {
-    val f = parse(fr.feature_json)
-    val geom = if (f.get("type").asText() == "Feature") f.get("geometry") else f
     val out = new ArrayBuffer[CoordRow]()
     var i = 0L
-    eachPosition(geom) { pos =>
+    eachPosition(geometry(parse(fr.feature_json))) { pos =>
       out += CoordRow(fr.feature_id, i, pos.get(0).asDouble(), pos.get(1).asDouble())
       i += 1
     }
@@ -96,27 +98,33 @@ object GeoJson {
     * src/elevation/addElevation.ts:13-15). `elevs(i)` pairs with coordEach
     * order index i; missing indices are written as 0.0.
     */
-  def withElevations(fr: FeatureRow, elevs: Map[Long, Double]): FeatureRow = {
+  def withElevations(fr: FeatureRow, elevs: Map[Long, Double]): FeatureRow =
+    writeElevations(fr)((i, _) => elevs.getOrElse(i, 0.0))
+
+  /** As [[withElevations]], with each position's elevation computed from its
+    * own (lng, lat): one parse and one serialization per feature. */
+  def withElevationsAt(fr: FeatureRow, elevAt: (Double, Double) => Double): FeatureRow =
+    writeElevations(fr)((_, pos) => elevAt(pos.get(0).asDouble(), pos.get(1).asDouble()))
+
+  /** Set every position's index 2 to `elev(coordEach index, position)`;
+    * a feature with no positions is returned as is, not re-serialized. */
+  private def writeElevations(fr: FeatureRow)(elev: (Long, ArrayNode) => Double): FeatureRow = {
     val f = parse(fr.feature_json)
-    val geom = if (f.get("type").asText() == "Feature") f.get("geometry") else f
     var i = 0L
-    eachPosition(geom) { pos =>
-      val e = elevs.getOrElse(i, 0.0)
-      if (pos.size() >= 3) pos.set(2, DoubleNode.valueOf(e))
-      else pos.add(DoubleNode.valueOf(e))
+    eachPosition(geometry(f)) { pos =>
+      val e = DoubleNode.valueOf(elev(i, pos))
+      if (pos.size() >= 3) pos.set(2, e) else pos.add(e)
       i += 1
     }
-    FeatureRow(fr.feature_id, write(f))
+    if (i == 0) fr else FeatureRow(fr.feature_id, write(f))
   }
 
   /** Read back the third (elevation) component of every position in
     * coordEach order — 0.0 where absent. Inverse of [[withElevations]].
     */
   def elevations(fr: FeatureRow): Seq[Double] = {
-    val f = parse(fr.feature_json)
-    val geom = if (f.get("type").asText() == "Feature") f.get("geometry") else f
     val out = new ArrayBuffer[Double]()
-    eachPosition(geom) { pos =>
+    eachPosition(geometry(parse(fr.feature_json))) { pos =>
       out += (if (pos.size() >= 3) pos.get(2).asDouble() else 0.0)
     }
     out.toSeq

@@ -29,14 +29,15 @@ final case class ElevRow(feature_id: String, coord_idx: Long, lng: Double,
   *    reducer samples its probes straight from the band's HGT bytes. A hot
   *    tile's probes spread over `bands` reducers because the tile is split
   *    into row bands, not copied.
+  *
+  * [[addElevation]] writes the broadcast lookup into each GeoJSON feature
+  * in one narrow pass, with no coordinate regroup (A4).
   */
 object Elevation {
 
   /** P4: explode features to coordinate rows in coordEach document order. */
-  def coordRows(features: Dataset[FeatureRow]): Dataset[CoordRow] = {
-    implicit val enc = org.apache.spark.sql.Encoders.product[CoordRow]
-    features.flatMap(GeoJson.coordRows _)
-  }
+  def coordRows(features: Dataset[FeatureRow]): Dataset[CoordRow] =
+    features.flatMap(GeoJson.coordRows _)(Encoders.product[CoordRow])
 
   /** Broadcast path: probe a broadcast [[TileIndex]] with a codegen'd
     * scalar expression — zero shuffle, zero join-row materialization of the
@@ -131,8 +132,11 @@ object Elevation {
                     bands: Int = 1): Dataset[ElevRow] = {
     val nb = math.max(1, bands)
     val swLng = floor(col("lng")); val swLat = floor(col("lat"))
-    val probes = coords.toDF().select( // _k: TileIndex.key in doubles, so ±Inf cannot overflow
-      ((swLat + 90.0) * 360.0 + swLng + 180.0).as("_k"),
+    // _k: TileIndex.key in doubles, so ±Inf cannot overflow; -1 (no tile) off
+    // the key's injective domain, NaN included (Spark orders NaN above all)
+    val inDomain = col("lng") >= -180.0 && col("lng") < 180.0 && col("lat") >= -90.0 && col("lat") < 90.0
+    val probes = coords.toDF().select(
+      when(inDomain, (swLat + 90.0) * 360.0 + swLng + 180.0).otherwise(-1.0).as("_k"),
       least(floor((col("lat") - swLat) * nb), lit(nb - 1L)).as("_b"),
       col("feature_id"), col("coord_idx"), col("lng"), col("lat"))
     val tileBands = tiles.flatMap { t =>
@@ -171,29 +175,16 @@ object Elevation {
     }
   }
 
-  /** Full `/geojson` query (entry point 1): add elevations into the GeoJSON
-    * features. A4 reassembly: group sampled coords per feature and rewrite
-    * the nested coordinate arrays in document order.
+  /** Full `/geojson` query (entry point 1), the reference's in-place walk
+    * (src/elevation/addElevation.ts:11-17) as one narrow map: each feature
+    * is parsed once, each position's index 2 is set to the broadcast
+    * [[TileIndex]]'s `elevation(lng, lat)` (the call `elev_at` makes, so
+    * values are bit-identical to [[lookupBroadcast]]) and the feature is
+    * serialized once. Features without positions pass through unchanged.
     */
-  def addElevation(features: Dataset[FeatureRow], tiles: Dataset[TileRow],
-                   broadcastTiles: Boolean = true): Dataset[FeatureRow] = {
-    val spark = features.sparkSession
-    import spark.implicits._
-    val coords = coordRows(features)
-    val sampled: Dataset[ElevRow] =
-      if (broadcastTiles)
-        lookupBroadcast(coords.toDF(), tiles)
-          .select($"feature_id", $"coord_idx", $"lng", $"lat", $"tile_key", $"elev")
-          .as[ElevRow]
-      else lookupCogroup(coords, tiles)
-    val perFeature = sampled.groupByKey(_.feature_id)
-      .mapGroups { (fid, rows) =>
-        (fid, rows.map(r => r.coord_idx -> r.elev).toMap)
-      }
-    features.joinWith(perFeature, features("feature_id") === perFeature("_1"), "left_outer")
-      .map { case (f, kv) =>
-        if (kv == null) f else GeoJson.withElevations(f, kv._2)
-      }
+  def addElevation(features: Dataset[FeatureRow], tiles: Dataset[TileRow]): Dataset[FeatureRow] = {
+    val bc = TileIndex.broadcastIndex(tiles)
+    features.map(f => GeoJson.withElevationsAt(f, bc.value.elevation))(Encoders.product[FeatureRow])
   }
 
   /** Entry point 2 (`/polyline`): decode polyline → sample → Terrarium byte

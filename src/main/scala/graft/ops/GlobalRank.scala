@@ -73,11 +73,13 @@ object GlobalRank {
     * via a θ-self-join instead of a window: numParts² comparisons is
     * nothing, and the plan carries no unpartitioned window at all.
     */
-  private def runningOffsets(perPart: DataFrame, valCol: String): DataFrame =
+  private def runningOffsets(perPart: DataFrame, valCols: String*): DataFrame = {
+    val offs = valCols.map(v => coalesce(sum(col(s"b.$v")), lit(0L)).as(s"${v}_off"))
     perPart.as("a")
       .join(perPart.as("b"), col(s"b.$PID") < col(s"a.$PID"), "left")
       .groupBy(col(s"a.$PID").as(PID))
-      .agg(coalesce(sum(col(s"b.$valCol")), lit(0L)).as("_gr_off"))
+      .agg(offs.head, offs.tail: _*)
+  }
 
   /** Global `row_number()` over `orderCols` as column `out`. */
   def withRowNumber(df: DataFrame, out: String, orderCols: Seq[Column],
@@ -86,8 +88,8 @@ object GlobalRank {
     val counts = r.groupBy(col(PID)).agg(count(lit(1)).as("_gr_cnt"))
     val offsets = runningOffsets(counts, "_gr_cnt")
     r.join(broadcast(offsets), Seq(PID))
-      .withColumn(out, col(LRN) + col("_gr_off"))
-      .drop(PID, LRN, "_gr_off")
+      .withColumn(out, col(LRN) + col("_gr_cnt_off"))
+      .drop(PID, LRN, "_gr_cnt_off")
   }
 
   /** Global `lag(valueCol, 1)` over `orderCols` as column `out`: the first
@@ -135,19 +137,24 @@ object GlobalRank {
 
   /** Global running `sum(valueCol)` (unbounded-preceding → current row)
     * over `orderCols` as column `out`: per-partition running sums plus the
-    * cumulative total of earlier range partitions.
+    * cumulative total of earlier range partitions. Null semantics follow
+    * the global window: null until the first non-null value, then the
+    * running total of the non-null ones — a partition whose local prefix
+    * is all null carries the earlier partitions' total. A running non-null
+    * count, carried the same way, tells the two apart.
     */
   def withCumSum(df: DataFrame, valueCol: String, out: String,
                  orderCols: Seq[Column], numParts: Int = -1): DataFrame = {
     val r = ranged(df, orderCols, numParts)
-    val sums = r.groupBy(col(PID)).agg(sum(valueCol).as("_gr_psum"))
-    val offsets = runningOffsets(sums, "_gr_psum")
+    val perPart = r.groupBy(col(PID))
+      .agg(sum(valueCol).as("_gr_psum"), count(valueCol).as("_gr_pcnt"))
+    val offsets = runningOffsets(perPart, "_gr_psum", "_gr_pcnt")
+    val upTo = Window.partitionBy(col(PID)).orderBy(orderCols: _*)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     r.join(broadcast(offsets), Seq(PID))
-      .withColumn(out, sum(valueCol).over(
-          Window.partitionBy(col(PID)).orderBy(orderCols: _*)
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-        + col("_gr_off"))
-      .drop(PID, LRN, "_gr_off")
+      .withColumn(out, when(count(valueCol).over(upTo) + col("_gr_pcnt_off") > 0,
+        coalesce(sum(valueCol).over(upTo), lit(0L)) + col("_gr_psum_off")))
+      .drop(PID, LRN, "_gr_psum_off", "_gr_pcnt_off")
   }
 
   /** Global `ntile(buckets)` over `orderCols` as column `out` (int),

@@ -41,11 +41,21 @@ final class TileIndex(rows: Array[TileRow]) extends Serializable {
 
   def size: Int = rows.length
 
+  /** The tile with SW corner (swLng, swLat), or null when there is none.
+    * Off lng [−180, 180) × lat [−90, 90), and for NaN or ±Inf, there never
+    * is one: the packed key is only injective on that domain, so (200, 0.5)
+    * would read N01W160 and a lat past `Int.MaxValue` would read tile (x, −1).
+    */
+  private def tileAt(swLng: Double, swLat: Double): DecodedTile =
+    if (swLng >= -180 && swLng < 180 && swLat >= -90 && swLat < 90)
+      decoded.get(TileIndex.key(swLng.toInt, swLat.toInt))
+    else null
+
   /** Bilinear elevation at (lng, lat); missing tile ⇒ sea level 0 (F8). */
   def elevation(lng: Double, lat: Double): Double = {
     val swLng = math.floor(lng)
     val swLat = math.floor(lat)
-    val d = decoded.get(TileIndex.key(swLng.toInt, swLat.toInt))
+    val d = tileAt(swLng, swLat)
     if (d == null) 0.0
     else Bilinear.sampleGrid(d.samples, d.size, swLng, swLat, lng, lat)
   }
@@ -58,7 +68,7 @@ final class TileIndex(rows: Array[TileRow]) extends Serializable {
   def slope2(lng: Double, lat: Double): Double = {
     val swLng = math.floor(lng)
     val swLat = math.floor(lat)
-    val d = decoded.get(TileIndex.key(swLng.toInt, swLat.toInt))
+    val d = tileAt(swLng, swLat)
     if (d == null) 0.0
     else {
       val size = d.size - 1
@@ -84,7 +94,7 @@ final class TileIndex(rows: Array[TileRow]) extends Serializable {
   def hillshade(lng: Double, lat: Double): Double = {
     val swLng = math.floor(lng)
     val swLat = math.floor(lat)
-    val d = decoded.get(TileIndex.key(swLng.toInt, swLat.toInt))
+    val d = tileAt(swLng, swLat)
     if (d == null) 0.0
     else {
       val size = d.size - 1
@@ -115,7 +125,7 @@ final class TileIndex(rows: Array[TileRow]) extends Serializable {
   def flowdirD8(lng: Double, lat: Double): Double = {
     val swLng = math.floor(lng)
     val swLat = math.floor(lat)
-    val d = decoded.get(TileIndex.key(swLng.toInt, swLat.toInt))
+    val d = tileAt(swLng, swLat)
     if (d == null) 0.0
     else {
       val size = d.size - 1
@@ -148,7 +158,7 @@ final class TileIndex(rows: Array[TileRow]) extends Serializable {
   def tri(lng: Double, lat: Double): Double = {
     val swLng = math.floor(lng)
     val swLat = math.floor(lat)
-    val d = decoded.get(TileIndex.key(swLng.toInt, swLat.toInt))
+    val d = tileAt(swLng, swLat)
     if (d == null) 0.0
     else {
       val size = d.size - 1
@@ -179,7 +189,7 @@ final class TileIndex(rows: Array[TileRow]) extends Serializable {
   def tpi(lng: Double, lat: Double): Double = {
     val swLng = math.floor(lng)
     val swLat = math.floor(lat)
-    val d = decoded.get(TileIndex.key(swLng.toInt, swLat.toInt))
+    val d = tileAt(swLng, swLat)
     if (d == null) 0.0
     else {
       val size = d.size - 1
@@ -212,7 +222,7 @@ final class TileIndex(rows: Array[TileRow]) extends Serializable {
   def laplacian(lng: Double, lat: Double): Double = {
     val swLng = math.floor(lng)
     val swLat = math.floor(lat)
-    val d = decoded.get(TileIndex.key(swLng.toInt, swLat.toInt))
+    val d = tileAt(swLng, swLat)
     if (d == null) 0.0
     else {
       val size = d.size - 1
@@ -235,7 +245,7 @@ final class TileIndex(rows: Array[TileRow]) extends Serializable {
   def aspectOctant(lng: Double, lat: Double): Double = {
     val swLng = math.floor(lng)
     val swLat = math.floor(lat)
-    val d = decoded.get(TileIndex.key(swLng.toInt, swLat.toInt))
+    val d = tileAt(swLng, swLat)
     if (d == null) 0.0
     else {
       val size = d.size - 1
@@ -261,7 +271,7 @@ final class TileIndex(rows: Array[TileRow]) extends Serializable {
   def elevationNearest(lng: Double, lat: Double): Double = {
     val swLng = math.floor(lng)
     val swLat = math.floor(lat)
-    val d = decoded.get(TileIndex.key(swLng.toInt, swLat.toInt))
+    val d = tileAt(swLng, swLat)
     if (d == null) 0.0
     else Bilinear.nearestGrid(d.samples, d.size, swLng, swLat, lng, lat)
   }

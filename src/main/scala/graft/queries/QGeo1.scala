@@ -221,11 +221,11 @@ object QGeo1 {
       }.toDF("grp", "idx", "lng5", "lat5").orderBy("grp", "idx")
     }),
     // A4 + P4 end to end: synthesize LineString features from point groups,
-    // run the full GeoJSON addElevation pipeline (flatten → broadcast-index
-    // sample → nested write-back), then re-extract per-feature stats whose
-    // oracle is the closed-form bilinear field. first/last/min/max are
-    // order-independent or index-pinned — exact doubles, no float-sum order
-    // sensitivity.,
+    // run the full GeoJSON addElevation pipeline (one narrow map: parse →
+    // broadcast-index sample per position → write-back), then re-extract
+    // per-feature stats whose oracle is the closed-form bilinear field.
+    // first/last/min/max are order-independent or index-pinned — exact
+    // doubles, no float-sum order sensitivity.,
     "feature_reassembly" -> ((s, dir) => {
       import s.implicits._
       val pts = gatePoints(s, dir).withColumn("grp", col("point_id") % 200)

@@ -22,7 +22,7 @@ object GeoJsonSource {
 
   /** One GeoJSON document per FILE (wholetext). feature_id is prefixed with
     * the source file's basename so ids stay keys across multi-file reads
-    * (downstream reassembly groups on feature_id — colliding ids would merge
+    * (coordinate rows are keyed on feature_id — colliding ids would mix
     * unrelated features' coordinates).
     */
   def readDocuments(spark: SparkSession, path: String): Dataset[FeatureRow] = {

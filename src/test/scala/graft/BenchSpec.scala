@@ -34,4 +34,25 @@ class BenchSpec extends AnyFunSuite {
     assert(written.contains(failed), written)
     assert(written.contains("\"queries\":{\"ok\":"), written) // failed queries get no time
   }
+
+  test("a failing stagedCopy is logged, and the run times the unstaged tables") {
+    val dir = Files.createTempDirectory("graft_benchspec_stage")
+    Files.write(dir.resolve("broken.parquet"), "not parquet".getBytes) // staging cannot read it
+    val env = Map(
+      "SPARK_GRAFT_SF_DIR" -> dir.toString, "SPARK_GRAFT_CPUS" -> "2",
+      "SPARK_GRAFT_SCALING" -> "0", "SPARK_GRAFT_STAGE" -> "1",
+      "SPARK_GRAFT_QUERY_PASSES" -> "1", "SPARK_GRAFT_ONLY" -> "sf_dir",
+      "SPARK_GRAFT_BENCH_DETAIL" -> dir.resolve("BENCH_DETAIL.json").toString)
+    var seen = ""
+    val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+      "sf_dir" -> ((s, d) => { seen = d; s.range(10).toDF() }))
+    val err = new java.io.ByteArrayOutputStream()
+    val stderr = System.err
+    System.setErr(new java.io.PrintStream(err, true))
+    val rc = try Console.withOut(new java.io.ByteArrayOutputStream())(Bench.run(env, queries))
+      finally System.setErr(stderr)
+    assert(rc == 0)
+    assert(err.toString.contains("[bench] stagedCopy failed, timing unstaged tables: "), err.toString)
+    assert(seen == dir.toString)
+  }
 }

@@ -87,20 +87,26 @@ class ElevationSparkSpec extends AnyFunSuite with BeforeAndAfterAll {
           Iterator.iterate(y + i.toDouble / b)(Math.nextDown).take(6)
         })
       for (lng <- lngs; lat <- lats) yield (lng, lat)
-    } ++ Seq((-0.0, 0.5), (0.5, -0.0), (-0.0, -0.0), // -0.0 keys to tile (0, 0)
-      // not (x, +Inf): the broadcast index's Int tile key wraps it onto tile (floor(x), -1)
-      (Double.NaN, 0.5), (0.5, Double.NaN), (Double.NegativeInfinity, 0.5),
-      (-119.0, 38.0), (-118.0, 36.5), (12.5, 45.5), (-121.5, -0.0)) // missing tiles
+    } ++ Seq((-0.0, 0.5), (0.5, -0.0), (-0.0, -0.0)) ++ // -0.0 keys to tile (0, 0)
+      Seq((Double.NaN, 0.5), (0.5, Double.NaN), (Double.NegativeInfinity, 0.5),
+      (-119.0, 38.0), (-118.0, 36.5), (12.5, 45.5), (-121.5, -0.0), // missing tiles
+      // off the packed key's domain: (200, 0.5) and (-181, 0.5) pack to the keys
+      // of N01W160 and S01E179, and a lat that saturates .toInt to tile (x, -1)
+      (200.0, 0.5), (-181.0, 0.5), (0.5, Double.PositiveInfinity), (0.5, 1e10))
+    val missing = 11 // the trailing points above: no tile ⇒ 0.0
+    val storeCorners = edgeCorners ++ Seq((-160, 1), (179, -1))
     val jmtCoords = Elevation.coordRows(spark.createDataset(GeoJson.featureRows(GeoJson.parse(jmt))))
     val coords = jmtCoords.union(spark.createDataset(adversarial.zipWithIndex.map {
       case ((lng, lat), i) => CoordRow("adversarial", i.toLong, lng, lat) }))
-    val hgt = spark.createDataset(TileGen.tiles(edgeCorners, 601, "hgt"))(Encoders.product[TileRow])
-    val png = spark.createDataset(TileGen.tiles(edgeCorners, 601, "png"))(Encoders.product[TileRow])
+    val hgt = spark.createDataset(TileGen.tiles(storeCorners, 601, "hgt"))(Encoders.product[TileRow])
+    val png = spark.createDataset(TileGen.tiles(storeCorners, 601, "png"))(Encoders.product[TileRow])
     val base = Elevation.lookupBroadcast(coords.toDF(), hgt)
       .select($"feature_id", $"coord_idx", $"elev").as[(String, Long, Double)]
       .collect().map(r => (r._1, r._2) -> r._3).toMap
     assert(base.size == 5998 + adversarial.size)
-    (adversarial.size - 4 until adversarial.size).foreach(i => assert(base(("adversarial", i.toLong)) == 0.0))
+    (adversarial.size - missing until adversarial.size).foreach { i =>
+      assert(java.lang.Double.doubleToRawLongBits(base(("adversarial", i.toLong))) == 0L, adversarial(i))
+    }
     for ((fmt, ts) <- Seq("hgt" -> hgt, "png" -> png); bands <- bandCounts) {
       val name = s"$fmt bands=$bands"
       val got = Elevation.lookupCogroup(coords, ts, bands).collect()
@@ -117,27 +123,46 @@ class ElevationSparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("addElevation writes elev into position index 2 of the GeoJSON (A4 reassembly)") {
     import spark.implicits._
-    val features = spark.createDataset(GeoJson.featureRows(GeoJson.parse(jmt)))
+    def feature(id: String, geom: String, props: String = "{}") =
+      FeatureRow(id, s"""{"type":"Feature","id":"$id","geometry":$geom,"properties":$props}""")
+    val nullGeom = feature("n", "null", """{"v":1.50}""")
+    val inputs = GeoJson.featureRows(GeoJson.parse(jmt)) ++ Seq(
+      FeatureRow("bare", """{"type":"LineString","coordinates":[[-118.5,36.5],[-119.9,37.2],[3.5,4.5]]}"""),
+      feature("gc", """{"type":"GeometryCollection","geometries":[{"type":"Point","coordinates":[-118.25,36.75]},""" +
+        """{"type":"Polygon","coordinates":[[[-119.5,36.5],[-119.4,36.5],[-119.4,36.6],[-119.5,36.5]]]}]}"""),
+      feature("z", """{"type":"LineString","coordinates":[[-118.5,36.5,1234.5],[-119.2,37.3,-7]]}"""),
+      nullGeom,
+      // two features under one feature_id: each keeps its own elevations
+      feature("dup", """{"type":"LineString","coordinates":[[-118.9,36.1],[-118.8,36.2]]}"""),
+      feature("dup", """{"type":"LineString","coordinates":[[-119.7,37.6],[-119.6,37.7]]}"""))
     val tds = spark.createDataset(tiles("hgt"))(Encoders.product[TileRow])
-    val out = Elevation.addElevation(features, tds).collect()
-    assert(out.length == 54)
-    val coords = out.flatMap { fr =>
-      val n = GeoJson.parse(fr.feature_json)
-      assert(n.get("properties") != null) // properties survive round-trip
-      GeoJson.coordRows(fr)
+    val out = Elevation.addElevation(spark.createDataset(inputs), tds).collect()
+    assert(out.length == inputs.length)
+    // the scalar path, keyed by input position so shared feature_ids stay apart
+    val keyed = inputs.zipWithIndex.map { case (f, i) => FeatureRow(i.toString, f.feature_json) }
+    val expect = Elevation.lookupBroadcast(Elevation.coordRows(spark.createDataset(keyed)).toDF(), tds)
+      .select($"feature_id", $"coord_idx", $"elev").as[(String, Long, Double)]
+      .collect().groupBy(_._1.toInt).map { case (i, rs) => i -> rs.map(r => r._2 -> r._3).toMap }
+    val bits = java.lang.Double.doubleToRawLongBits _
+    inputs.zip(out).zipWithIndex.foreach { case ((in, got), i) =>
+      assert(got.feature_id == in.feature_id)
+      val want = expect.getOrElse(i, Map.empty[Long, Double])
+      assert(GeoJson.coordRows(got).map(c => (c.lng, c.lat)) == GeoJson.coordRows(in).map(c => (c.lng, c.lat)))
+      val elevs = GeoJson.elevations(got)
+      assert(elevs.length == want.size, in.feature_id)
+      elevs.zipWithIndex.foreach { case (e, j) =>
+        assert(bits(e) == bits(want(j.toLong)), s"${in.feature_id} position $j: $e != ${want(j.toLong)}")
+      }
+      // the Map writer fed by the scalar path writes the same bytes
+      if (want.nonEmpty) assert(got.feature_json == GeoJson.withElevations(in, want).feature_json)
     }
-    assert(coords.length == 5998)
-    // every position now has a third component > 0
-    out.foreach { fr =>
-      val node = GeoJson.parse(fr.feature_json)
-      val geom = node.get("geometry")
-      def walk(n: com.fasterxml.jackson.databind.JsonNode): Unit =
-        if (n.isArray) {
-          if (n.size() > 0 && n.get(0).isNumber) assert(n.size() >= 3 && n.get(2).asDouble() > 0.0)
-          else (0 until n.size()).foreach(i => walk(n.get(i)))
-        }
-      walk(geom.get("coordinates"))
-    }
+    val byId = out.groupBy(_.feature_id)
+    assert(byId("n").head.feature_json == nullGeom.feature_json) // passed through, not re-serialized
+    assert(!byId("z").head.feature_json.contains("1234.5") && GeoJson.elevations(byId("z").head).forall(_ > 0))
+    assert(GeoJson.elevations(byId("bare").head).last == 0.0) // (3.5, 4.5): no tile
+    val Array(d0, d1) = byId("dup").map(GeoJson.elevations)
+    assert(d0.forall(_ > 0) && d1.forall(_ > 0) && d0.intersect(d1).isEmpty)
+    assert(out.take(54).flatMap(GeoJson.elevations).count(_ > 0) == 5998) // JMT is all on land
   }
 
   test("polyline → terrarium byte stream (entry point 2)") {

@@ -69,6 +69,22 @@ class GlobalRankSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got === expect)
   }
 
+  test("withCumSum keeps the global window's nulls: a partition with an all-null prefix carries the total") {
+    import spark.implicits._
+    // ids 0-19 null (global prefix ⇒ null); ids 100-199 null span whole
+    // range partitions, whose running sum is the earlier total, not null
+    val in = (0 until 300).map { i =>
+      (i.toLong, if (i < 20 || (i >= 100 && i < 200)) None else Some((i % 7).toLong))
+    }.toDF("id", "v")
+    val keys = Seq(col("id").asc)
+    def sums(d: org.apache.spark.sql.DataFrame) = d.select("id", "cs").collect()
+      .map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getLong(1)))).toMap
+    val expect = sums(in.withColumn("cs", sum("v").over(Window.orderBy(keys: _*)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow))))
+    assert(expect.values.count(_.isEmpty) == 20)
+    assert(sums(GlobalRank.withCumSum(in, "v", "cs", keys, numParts = 6)) === expect)
+  }
+
   test("withCumSum equals global running sum") {
     val in = df(300)
     val keys = Seq(col("v").desc, col("id").asc)

@@ -1,10 +1,11 @@
 package graft
 
-import graft.core.{CoordRow, TileRow}
+import graft.core.{CoordRow, FeatureRow, TileRow}
 import graft.ops.Elevation
 import graft.synth.TileGen
 import org.apache.spark.sql.{Encoders, SparkSession}
-import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, Exchange, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.SortMergeJoinExec
 import org.apache.spark.sql.execution.{CoGroupExec, FileSourceScanExec, WholeStageCodegenExec}
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
@@ -68,6 +69,31 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
       val written = shuffles.head.metrics("shuffleRecordsWritten").value
       assert(written == probes + ts.size * bands,
         s"$written rows entered the exchange, want $probes probes + ${ts.size}×$bands tile bands")
+    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+  }
+
+  test("addElevation is one narrow map: no exchange, no join back, one job (the index collect)") {
+    val sc = spark.sparkContext
+    // RDD-backed, so collecting the tiles runs a job (a local Seq collects without one)
+    val tiles = spark.createDataset(sc.parallelize(
+      TileGen.tiles(Seq((-120, 36), (-119, 36)), 61, "hgt")))(Encoders.product[TileRow])
+    val features = spark.createDataset(sc.parallelize((0 until 200).map { i =>
+      FeatureRow(i.toString, s"""{"type":"Feature","geometry":{"type":"LineString",""" +
+        s""""coordinates":[[-119.5,36.${i % 10}1],[-118.6,36.5]]},"properties":{}}""")
+    }, 4))(Encoders.product[FeatureRow])
+    sc.setJobGroup("planspec_add_elevation", "plan build only")
+    val out = try Elevation.addElevation(features, tiles) finally sc.clearJobGroup()
+    def jobs = sc.statusTracker.getJobIdsForGroup("planspec_add_elevation")
+    val deadline = System.nanoTime() + 10000000000L // job events reach the tracker asynchronously
+    while (jobs.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+    assert(jobs.length == 1, "building addElevation should run only the tile index collect")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      assert(out.collect().length == 200)
+      val plan = out.queryExecution.executedPlan
+      assert(plan.collect { case e: Exchange => e }.isEmpty, s"exchange in plan:\n$plan")
+      assert(plan.collect { case c: CoGroupExec => c; case j: SortMergeJoinExec => j }.isEmpty,
+        s"join back in plan:\n$plan")
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
   }
 
